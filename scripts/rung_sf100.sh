@@ -44,8 +44,7 @@ case "$STEP" in
     # spark.memory.fraction instead: 0.75 at 64g let the bucketed-write
     # sorters grow multi-GB pointer arrays and OOM'd where default-fraction
     # 48g survived (round 15, rung_stage3.log).
-    SPARK_GRAFT_STAGE_CODEC=zstd \
-      SPARK_GRAFT_STAGE_CONF="spark.sql.parquet.compression.codec=zstd" \
+    SPARK_GRAFT_STAGE_CONF="spark.io.compression.codec=zstd;spark.sql.parquet.compression.codec=zstd" \
       $JAVA_BASE -Xmx48g -XX:G1HeapRegionSize=32m \
       graft.tools.StageExtract $SF_DIR
     ;;
@@ -59,7 +58,7 @@ case "$STEP" in
     # on disk — codec is part of the instrument and the record's PERF.md
     # row says so. SUITE_ONLY skips the auto-isolate/materializing passes
     # (they re-run ~80 of the heaviest plans — hours at sf100); the JSON
-    # self-declares "suite_only":true. Unset CODEC/SUITE_ONLY to override.
+    # self-declares "suite_only":true. Pass CODEC=lz4 / SUITE_ONLY=0 to override.
     SPARK_GRAFT_SKIP_KEYS=qllm_srp_lsh \
       SPARK_GRAFT_SUITE_ONLY=${SUITE_ONLY:-1} \
       $JAVA_BASE -Xmx16g -XX:G1HeapRegionSize=32m \

@@ -1,15 +1,13 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage attribution probe — the instrument `--isolate` doesn't have.
   *
   * `--isolate` answers "how much" (clean wall + process CPU for one
   * query); this answers "WHERE": it replays one registry query under the
-  * exact Bench session (same master, shuffle partitions, page size,
-  * bucketed-sort trust) with a stage listener attached, and prints one
-  * line per completed stage — tasks, wall, summed executor run/CPU time,
+  * Bench session ([[Session]]) with a stage listener attached, and prints
+  * one line per completed stage — tasks, wall, summed executor run/CPU time,
   * shuffle read/write bytes, memory/disk spill — for the warmup run and
   * the measured run separately. Built round 12 for the pagerank
   * sf10→sf30 CPU curve (600 → 2857 s on 3× data), where the obvious
@@ -29,16 +27,8 @@ object StageProbe {
     val name = args.headOption.getOrElse(
       sys.error("usage: StageProbe <query-name>"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.buffer.pageSize", "16m")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cores
+    val spark = Session("graft-stageprobe", cpus)
 
     @volatile var phase = "setup"
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -320,17 +320,17 @@ object ExtractFixtures {
     * exchange and no sort. Derived from the staged canonical edges;
     * write-once per (JVM, sfDir) like every fixture here. */
   def copurchaseAdjacency(spark: SparkSession, sfDir: String): String = {
-    val edges = spark.read.schema("src BIGINT, dst BIGINT")
-      .parquet(copurchaseEdges(spark, sfDir))
+    val edgesPath = copurchaseEdges(spark, sfDir)
+    val edges = spark.read.schema("src BIGINT, dst BIGINT").parquet(edgesPath)
     val doubled = edges.unionAll(
       edges.select(col("dst").as("src"), col("src").as("dst")))
     // the row count only runs when the fixture is actually (re)written —
-    // a parquet metadata count on the staged edges, doubled
+    // the staged edges' footer row count, doubled
     ensureBucketed(spark, sfDir, s"graft_adj_bkt_${pathTag(sfDir)}",
       "copurchase_adj", doubled,
       org.apache.spark.sql.types.StructType.fromDDL("src BIGINT, dst BIGINT"),
       "src", AdjBuckets, Seq("src", "dst"),
-      dynamicBuckets = Some(() => adjBucketsFor(2L * edges.count())))
+      dynamicBuckets = Some(() => adjBucketsFor(2L * Tables.rowCount(edgesPath))))
   }
 
   /** orders and lineitem written SORTED-BUCKETED by orderkey
@@ -351,9 +351,9 @@ object ExtractFixtures {
     // one shared count → one shared bucket count: orders and lineitem MUST
     // agree or the co-located join grows an exchange. Sized from lineitem
     // (the wide side — its per-bucket sort is the binding write cost); the
-    // parquet metadata count only runs when the fixture is actually
+    // footer row count only runs when the fixture is actually
     // (re)written, never on marker re-attach.
-    val shared = () => factBucketsFor(Tables.lineitem(spark, sfDir).count())
+    val shared = () => factBucketsFor(Tables.rowCount(s"$sfDir/lineitem.parquet"))
     (ensureBucketed(spark, sfDir, s"graft_orders_bkt_$tag", "orders_bucketed",
        Tables.orders(spark, sfDir), Tables.ordersSchema, "o_orderkey",
        dynamicBuckets = Some(shared)),

@@ -1,9 +1,16 @@
 package graft.etl
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 /** Fixture table access with explicit, declared schemas (never inferred —
   * SURVEY.md §1.2) and a per-(session, sfDir) memo so repeated query builds
@@ -175,37 +182,50 @@ object Tables {
     } else table(s, d, "events")
   }
 
-  /** One footer read per directory: is events.ts physical NANOS? */
+  /** One footer read per directory: is events.ts physical NANOS? One
+    * footer suffices: a writer never mixes ts precisions within one
+    * dataset. */
   private val tsNanosCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
   private def eventsTsIsNanos(d: String): Boolean =
     tsNanosCache.computeIfAbsent(d, dir => {
-      val conf = new org.apache.hadoop.conf.Configuration()
-      // `events.parquet` may be a single FILE (the driver's layout) or a
-      // DIRECTORY of part files (any Spark-written dataset, e.g. the
-      // GenData scale fixtures) — footer-sniff the first data file either
-      // way. One footer suffices: a writer never mixes ts precisions
-      // within one dataset.
-      var path = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-      val fs = path.getFileSystem(conf)
-      if (fs.getFileStatus(path).isDirectory) {
-        path = fs.listStatus(path).map(_.getPath)
-          .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
-          .sortBy(_.getName).headOption
-          .getOrElse(throw new IllegalArgumentException(
-            s"no parquet data files under $dir/events.parquet"))
+      val path = s"$dir/events.parquet"
+      val file = dataFiles(path).headOption.getOrElse(
+        throw new IllegalArgumentException(s"no parquet data files under $path"))
+      val ts = footer(file).getFileMetaData.getSchema.getType(Seq("ts"): _*)
+        .asPrimitiveType().getLogicalTypeAnnotation
+      ts match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+        case _ => true // plain INT64 epoch: only the nanos era shipped that
       }
-      val input = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(input)
-      try {
-        val ts = reader.getFileMetaData.getSchema.getType(Seq("ts"): _*)
-          .asPrimitiveType().getLogicalTypeAnnotation
-        ts match {
-          case t: org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            t.getUnit == org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.NANOS
-          case _ => true // plain INT64 epoch: only the nanos era shipped that
-        }
-      } finally reader.close()
     })
+
+  /** Row count of the parquet dataset at `path`, summed from the row-group
+    * row counts in its data files' footers. It reads the footers in the
+    * calling process and submits no Spark job, so query builds and
+    * fixture staging can size partitions and buckets from it for the
+    * cost of a few footer reads. */
+  def rowCount(path: String): Long =
+    dataFiles(path).map(f => footer(f).getBlocks.asScala.map(_.getRowCount).sum).sum
+
+  /** The parquet data files at `path`: the path itself when it is a file
+    * (single-file fixture tables), else the directory's `.parquet`
+    * files (any Spark-written dataset), by name. `_SUCCESS`, fixture
+    * markers and `.crc` checksums are skipped. */
+  private def dataFiles(path: String): Seq[Path] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(new Configuration())
+    if (!fs.getFileStatus(p).isDirectory) Seq(p)
+    else fs.listStatus(p).toSeq.map(_.getPath)
+      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
+      .sortBy(_.getName)
+  }
+
+  private def footer(file: Path): ParquetMetadata = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, new Configuration()))
+    try reader.getFooter finally reader.close()
+  }
+
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

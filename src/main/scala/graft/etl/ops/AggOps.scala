@@ -105,9 +105,9 @@ object AggOps {
     * percentile 0.93 → 1.10) for zero benefit at that heap footprint —
     * while above it the census approaches row scale and MUST be
     * serialized/spillable (a 6·10⁷-row deserialized census is the
-    * heap-OOM shape ckptEdges' scaladoc documents). `inputRows` comes from
-    * the fact table's parquet metadata count — a footer-statistics job,
-    * no data scan. 3·10⁷ rows ≈ a few GB deserialized at ~100 B/row: well
+    * heap-OOM shape ckptEdges' scaladoc documents). `inputRows` is the
+    * fact table's [[Tables.rowCount]]: footer reads, no Spark job.
+    * 3·10⁷ rows ≈ a few GB deserialized at ~100 B/row: well
     * inside a 16 GB driver-JVM heap below the gate, not above it. */
   private def ckptCensus(df: DataFrame, inputRows: Long): DataFrame =
     if (inputRows > 30000000L)
@@ -324,7 +324,7 @@ object AggOps {
           (col("o_totalprice").cast(DecimalType(12, 4)) * lit(10000))
             .cast(LongType).as("pi"))
         .groupBy(col("st"), col("pi")).agg(count(lit(1)).as("cnt")),
-        Tables.orders(spark, sfDir).count())
+        Tables.rowCount(s"$sfDir/orders.parquet"))
       val bp = binnedPicks(vc, "st", "pi", "cnt", 10000000L, Seq(
         (1, expr("(__tot - 1) div 2 + 1")),
         (2, expr("__tot div 2 + 1")),
@@ -991,7 +991,7 @@ object AggOps {
           d124(col("l_quantity")).cast(LongType).as("w"))
         .groupBy(col("flag"), col("pi"))
         .agg(sum(col("w")).as("cw")),
-        Tables.lineitem(spark, sfDir).count())
+        Tables.rowCount(s"$sfDir/lineitem.parquet"))
       // cum·100 ≥ tot·q  ⟺  cum ≥ ⌈tot·q/100⌉ over integers — the
       // binnedPicks target form. $100 bins (pi div 10^6): the bin frame
       // is ≤ ~1.1 k rows per flag at ANY scale (price-domain-bound).

@@ -234,8 +234,8 @@ object GraphOps {
       // round-12 StageProbe showed what its sort-fallback costs: 39 GB
       // memory-spill per iteration when the map outgrew its pool share).
       // Size it from the node-domain bound — copurchase node ids are
-      // part keys, so the part table's footer row count (metadata-only,
-      // no fact scan) bounds distinct dst exactly — at the same ~1.5 M
+      // part keys, so the part table's footer row count (Tables.rowCount,
+      // no Spark job) bounds distinct dst exactly — at the same ~1.5 M
       // keys/task target as the wedge aggregate. Below the trip point
       // the un-numbered repartition(dst) is kept verbatim: it stays
       // AQE-coalescible and the ≤ sf60 proven plans are untouched
@@ -243,7 +243,7 @@ object GraphOps {
       // engages around sf700 at defParts 32, and on a 1000-executor
       // session with defParts in the thousands, proportionally later).
       val defParts = spark.sessionState.conf.numShufflePartitions
-      val nodeBound = Tables.part(spark, sfDir).count()
+      val nodeBound = Tables.rowCount(s"$sfDir/part.parquet")
       val contribParts = math.min(4096, (nodeBound / 1500000L).toInt + 1)
       var pr = nodes.select(col("v"), col("deg"),
         expr("1000000000000 div n").as("pr"))
@@ -403,7 +403,8 @@ object GraphOps {
         .agg(count_distinct(col("src")).as("n_nodes"),
           (count(lit(1)) / 2).cast("bigint").as("n_edges"))
         .select(lit(0).as("round"), col("n_nodes"), col("n_edges")))
-      for (r <- 1 to 3) {
+      val rounds = 3
+      for (r <- 1 to rounds) {
         // one node-scale degree frame per round over the PRE-peel frame:
         // round 1 rides the bucketed adjacency (count-per-src IS the
         // degree, bucket-local — the round-11 shape); later rounds
@@ -435,9 +436,9 @@ object GraphOps {
         // write + re-read of the whole round-3 frame to serve one pass);
         // rounds with a next peel keep it (the next round's degree
         // aggregate AND its two keep broadcasts re-read the frame).
-        ecur = if (r < 3) ckptEdges(peeled) else peeled
+        ecur = if (r < rounds) ckptEdges(peeled) else peeled
       }
-      census += summaryOfDeg(degreeOf(ecur), 3)
+      census += summaryOfDeg(degreeOf(ecur), rounds)
       census.reduce(_ unionAll _).orderBy(col("round"))
     },
     oracle = Some {

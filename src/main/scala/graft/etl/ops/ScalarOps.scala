@@ -355,11 +355,12 @@ object ScalarOps {
       // discipline as [[LlmOps.gramStream]]), skipped when the session
       // default already gives that density — the ≤ sf30 plans are
       // byte-identical to the round-12 proven ones. The sizing count is
-      // parquet-metadata-only. Both sides repartition on their join key
-      // with the SAME count, so EnsureRequirements inserts no further
-      // exchange and the hint still plans the hash build on orders.
+      // the footer row count (Tables.rowCount), no Spark job. Both sides
+      // repartition on their join key with the SAME count, so
+      // EnsureRequirements inserts no further exchange and the hint still
+      // plans the hash build on orders.
       val defParts = spark.sessionState.conf.numShufflePartitions
-      val nOrders = Tables.orders(spark, sfDir).count()
+      val nOrders = Tables.rowCount(s"$sfDir/orders.parquet")
       val nparts = math.min(4096, (nOrders / 1500000L).toInt + 1)
       // Trip point is nparts > defParts, NOT a ≥ 25% hysteresis (round-14
       // reconciliation): both sides repartition on the join key with the

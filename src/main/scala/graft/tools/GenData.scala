@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic-testdata twin of the driver's seed-42
@@ -47,18 +47,11 @@ object GenData {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.map(_.toDouble).getOrElse(1.0)
     val out = args.lift(1).getOrElse(s"/tmp/graft_sf$sf")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .appName("graft-gendata")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Tables.events sniffs the parquet footer for the ts physical type;
-      // write MICROS explicitly (the post-round-7 driver layout), never
-      // INT96.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Tables.events sniffs the parquet footer for the ts physical type;
+    // write MICROS explicitly (the post-round-7 fixture layout), never
+    // INT96. Every write below sets its own partition count.
+    val spark = graft.Session("graft-gendata", overrides = Seq(
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
 
     val nCustomer = (150000 * sf).toLong
     val nSupplier = (10000 * sf).toLong

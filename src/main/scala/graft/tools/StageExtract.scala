@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.etl.ExtractFixtures
 
 /** Pre-stages the derived extract fixtures for one sf directory — the
@@ -17,11 +16,13 @@ import graft.etl.ExtractFixtures
   *     graft.tools.StageExtract /tmp/graft_sf100 [step ...]
   *
   * Steps default to all; naming a subset stages just those (order kept).
-  * SPARK_GRAFT_STAGE_CODEC overrides spark.io.compression.codec for the
-  * STAGING session only (zstd ≈ 1.5× smaller shuffle transients than the
-  * lz4 default — the staged parquet/csv outputs are byte-identical
-  * either way, parquet codecs are a separate setting, so timed sessions
-  * never see a difference).
+  * SPARK_GRAFT_STAGE_CONF adds session confs for the STAGING session
+  * only, as `k=v;k=v`. The disk-bound rungs use it for
+  * `spark.io.compression.codec=zstd` (≈ 1.5× smaller shuffle transients
+  * than the lz4 default; the staged parquet/csv outputs are
+  * byte-identical either way, since parquet codecs are a separate
+  * setting) and to trade the staging JVM's heap against sort-spill
+  * bytes (e.g. a high spark.memory.fraction).
   */
 object StageExtract {
   /** Staging shuffles (the pair-distinct inside copurchase edges, the
@@ -48,13 +49,13 @@ object StageExtract {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val parts = sys.env.get("SPARK_GRAFT_STAGE_PARTS").map(_.toInt)
-      .getOrElse(sizedShufflePartitions(sfDir, cpus.toInt))
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
+    val cpus = graft.Session.cores
+    val parts = sizedShufflePartitions(sfDir, cpus)
+    val extra = sys.env.get("SPARK_GRAFT_STAGE_CONF").toSeq
+      .flatMap(_.split(';').filter(_.nonEmpty))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = graft.Session("graft-stage-extract", cpus, Seq(
+      "spark.sql.shuffle.partitions" -> parts.toString,
       // 8m, NOT 16m: G1 regions top out at 32 MB, so 16 MB sorter pages
       // are humongous allocations — at sf100 the bucketed-write sorts
       // allocate thousands of them while zstd/lz4 JNI streams hold the
@@ -62,28 +63,12 @@ object StageExtract {
       // waiting for GCLocker too often allocating 2097154 words",
       // stage_sf100_b/_c). Half-region pages never go humongous; pair
       // with -XX:G1HeapRegionSize=32m on the staging JVM.
-      .config("spark.buffer.pageSize",
-        sys.env.getOrElse("SPARK_GRAFT_STAGE_PAGE", "8m"))
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+      "spark.buffer.pageSize" -> "8m",
       // drive the weak-ref cleaner aggressively: staging JVMs are big-heap
       // and shuffle-heavy, so finished shuffles' files otherwise outlive
       // their step and stack up against the disk budget (see the step-loop
       // note below)
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_STAGE_CODEC")
-      .foreach(c => b.config("spark.io.compression.codec", c))
-    // extra session confs, "k=v;k=v" — the disk-bound rungs trade the
-    // staging JVM's heap against sort-spill bytes (e.g. a high
-    // spark.memory.fraction keeps the sf100 lineitem bucketed-write sort
-    // in memory where the box's disk cannot hold a second spilled copy)
-    sys.env.get("SPARK_GRAFT_STAGE_CONF").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k, v)
-      })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.cleaner.periodicGC.interval" -> "60s") ++ extra)
     println(s"[stage] sfDir=$sfDir cpus=$cpus shufflePartitions=$parts")
     val steps: Seq[(String, () => Any)] = Seq(
       "copurchase" -> (() => ExtractFixtures.copurchaseAdjacency(spark, sfDir)),

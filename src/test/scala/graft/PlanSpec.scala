@@ -693,10 +693,23 @@ class PlanSpec extends SparkFixture {
     } finally created.values.foreach(_.unpersist(blocking = false))
   }
 
+  test("the shared test session is graft.Session's: 16m pages, bucket-sort trust, UTC, partitions = cores") {
+    val pinned = Seq(
+      "spark.buffer.pageSize" -> "16m",
+      "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.shuffle.partitions" -> SparkFixture.cores.toString)
+    assert(spark.sparkContext.appName == "graft-tests" &&
+      spark.sparkContext.master == s"local[${SparkFixture.cores}]" &&
+      pinned.forall(Session.settings(SparkFixture.cores).contains) &&
+      pinned.forall { case (k, v) => spark.conf.get(k) == v },
+      s"session drifted from graft.Session: ${pinned.map { case (k, _) => k -> spark.conf.getOption(k) }}")
+  }
+
   test("staged adjacency scan declares its bucket sort order (legacy-conf contract)") {
     // SURVEY §4 design contract: qgraph_pagerank's zero-sort edge stream
     // DEPENDS on `spark.sql.legacy.bucketedTableScan.outputOrdering=true`
-    // (set in all five session builders) PLUS the exactly-one-file-per-
+    // (set by graft.Session) PLUS the exactly-one-file-per-
     // bucket invariant the fixture writer guarantees. The fallback — a
     // per-task re-sort of the edge side every iteration — is a measured
     // 16 GB OOM at sf10 (PERF.md round 10). If a future Spark major drops
